@@ -56,12 +56,30 @@ def match_set(eng: SearchEngine, query_text: str, mode: str = "or",
         docs = docs.filter(F.col("n_terms") == len(terms))
     elif min_should_match is not None:
         docs = docs.filter(F.col("n_terms") >= min_should_match)
-    docs = docs.select("doc_id")
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        docs = docs.join(F.broadcast(ts), "doc_id", "left_anti")
-    return docs
+    return eng.live_df(docs.select("doc_id"))
+
+
+def _unpivot(row: DataFrame, pairs, key: str, val: str,
+             *keep: str) -> DataFrame:
+    """One-row aggregate → one ``(key, val)`` row per ``(key literal,
+    column)`` pair, in order (``keep`` columns ride along).  Keys are
+    typed literals, never SQL text — a caller's bucket name may hold
+    any character."""
+    cells = F.array(*[F.struct(F.lit(k).alias(key), c.alias(val))
+                      for k, c in pairs])
+    return (row.select(*keep, F.explode(cells).alias("_kv"))
+            .select(*keep, f"_kv.{key}", f"_kv.{val}"))
+
+
+def _integral(docs: DataFrame, *cols: str) -> None:
+    """Exact-sum aggs cast to BIGINT: refuse a non-integral column
+    instead of silently truncating it."""
+    from pyspark.sql.types import IntegralType
+    for c in cols:
+        dt = docs.schema[c].dataType
+        if not isinstance(dt, IntegralType):
+            raise TypeError(f"column {c!r} is {dt.simpleString()}; this "
+                            "agg sums exactly and needs an integer column")
 
 
 def search_count(eng: SearchEngine, query_text: str, mode: str = "or",
@@ -154,7 +172,7 @@ def search_range_agg(eng: SearchEngine, docs: DataFrame, query_text: str,
 
     One pass: each range is a conditional sum inside a single global
     aggregate (map-side partials), then the one-row result unpivots to
-    (key, doc_count) rows via ``stack`` — N ranges never cost N scans,
+    (key, doc_count) rows (:func:`_unpivot`) — N ranges never cost N scans,
     and nothing hit-set-sized reaches the driver."""
     if not ranges:
         raise ValueError("range agg needs at least one range")
@@ -173,10 +191,9 @@ def search_range_agg(eng: SearchEngine, docs: DataFrame, query_text: str,
                                F.lit(0)).cast("long").alias(f"_b{i}"))
         keys.append(f"{'*' if frm is None else float(frm)}-"
                     f"{'*' if to is None else float(to)}")
-    row = scoped.agg(*aggs)
-    stack = ", ".join(f"'{k}', _b{i}" for i, k in enumerate(keys))
-    return row.select(F.expr(
-        f"stack({len(keys)}, {stack}) AS (key, doc_count)"))
+    return _unpivot(scoped.agg(*aggs),
+                    [(k, F.col(f"_b{i}")) for i, k in enumerate(keys)],
+                    "key", "doc_count")
 
 
 def search_extended_stats_agg(eng: SearchEngine, docs: DataFrame,
@@ -188,7 +205,9 @@ def search_extended_stats_agg(eng: SearchEngine, docs: DataFrame,
     (population, ES default) and std_deviation over the hit set.  The
     moments derive from EXACT integer sums (count, sum, sum_sq are
     BIGINT for integer doc values), so an oracle can reproduce the
-    derived doubles bit-for-bit — no aggregation-order float drift."""
+    derived doubles bit-for-bit — no aggregation-order float drift.
+    A non-integral column raises TypeError."""
+    _integral(docs, num_col)
     hits = match_set(eng, query_text, mode, min_should_match)
     scoped = (docs.select("doc_id", num_col).join(hits, "doc_id", "semi")
               .filter(F.col(num_col).isNotNull()))
@@ -246,7 +265,9 @@ def search_weighted_avg_agg(eng: SearchEngine, docs: DataFrame,
     entirely; a NULL value with a live weight is skipped too (no
     ``value.missing`` default configured).  The two sums are exact
     BIGINTs for integer columns, so the derived double is
-    oracle-reproducible; one scalar aggregate."""
+    oracle-reproducible; one scalar aggregate.  Non-integral columns
+    raise TypeError."""
+    _integral(docs, value_col, weight_col)
     hits = match_set(eng, query_text, mode, min_should_match)
     scoped = (docs.select("doc_id", value_col, weight_col)
               .join(hits, "doc_id", "semi")
@@ -313,16 +334,12 @@ def search_percentile_ranks_agg(eng: SearchEngine, docs: DataFrame,
         aggs.append(F.coalesce(
             F.sum(F.when(c <= float(x), 1).otherwise(0)), F.lit(0))
             .cast("long").alias(f"_le{i}"))
-    row = scoped.agg(*aggs)
-    stack = ", ".join(
-        f"CAST({float(x)} AS DOUBLE), _le{i}" for i, x in
-        enumerate(values))
-    return (row.select("_n", F.expr(
-        f"stack({len(values)}, {stack}) AS (value, n_le)"))
-        .select("value", "n_le",
-                F.when(F.col("_n") > 0,
-                       F.col("n_le") * 100.0 / F.col("_n"))
-                .otherwise(0.0).alias("rank_pct")))
+    pairs = [(float(x), F.col(f"_le{i}")) for i, x in enumerate(values)]
+    return (_unpivot(scoped.agg(*aggs), pairs, "value", "n_le", "_n")
+            .select("value", "n_le",
+                    F.when(F.col("_n") > 0,
+                           F.col("n_le") * 100.0 / F.col("_n"))
+                    .otherwise(0.0).alias("rank_pct")))
 
 
 def search_adjacency_matrix_agg(eng: SearchEngine,
@@ -348,10 +365,7 @@ def search_adjacency_matrix_agg(eng: SearchEngine,
     flat = (read_flat(eng.cat, eng.spark)
             .filter(F.col("term").isin(union_terms))
             .select("term", "doc_id"))
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = eng.live_df(flat)
     counts = [F.sum(F.when(F.col("term").isin(ts), 1).otherwise(0))
               .alias(f"_n{i}") if ts else F.lit(0).alias(f"_n{i}")
               for i, ts in enumerate(terms_by[n] for n in names)]
@@ -369,13 +383,10 @@ def search_adjacency_matrix_agg(eng: SearchEngine,
     conds = [F.coalesce(F.sum(F.when(pred, 1).otherwise(0)), F.lit(0))
              .cast("long").alias(f"_b{i}")
              for i, (_, pred) in enumerate(buckets)]
-    row = perdoc.agg(*conds)
-    stack = ", ".join(f"'{nm}', _b{i}"
-                      for i, (nm, _) in enumerate(buckets))
-    return (row.select(F.expr(
-        f"stack({len(buckets)}, {stack}) AS (bucket, doc_count)"))
-        .filter(F.col("doc_count") > 0)
-        .orderBy("bucket"))
+    pairs = [(nm, F.col(f"_b{i}")) for i, (nm, _) in enumerate(buckets)]
+    return (_unpivot(perdoc.agg(*conds), pairs, "bucket", "doc_count")
+            .filter(F.col("doc_count") > 0)
+            .orderBy("bucket"))
 
 
 def search_string_stats_agg(eng: SearchEngine, query_text: str,
@@ -623,7 +634,8 @@ def search_filters_agg(eng: SearchEngine,
     matched, ``and``: all matched) as a conditional sum in one global
     aggregate — N buckets never cost N scans (a 20-filter dashboard
     pays one pass, not 20).  The one-row result unpivots driver-trivially
-    via ``stack``; buckets whose query analyzes to no live terms count 0.
+    (:func:`_unpivot`); buckets whose query analyzes to no live terms
+    count 0.
     """
     if not filters:
         raise ValueError("filters agg needs at least one named filter")
@@ -637,10 +649,7 @@ def search_filters_agg(eng: SearchEngine,
         flat = (read_flat(eng.cat, eng.spark)
                 .filter(F.col("term").isin(union_terms))
                 .select("term", "doc_id"))
-        if eng.tombstones:
-            ts = eng.spark.createDataFrame(
-                [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-            flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+        flat = eng.live_df(flat)
         counts = [F.sum(F.when(F.col("term").isin(ts), 1).otherwise(0))
                   .alias(f"_n{i}") if ts else F.lit(0).alias(f"_n{i}")
                   for i, ts in enumerate(terms_by[n] for n in names)]
@@ -653,12 +662,9 @@ def search_filters_agg(eng: SearchEngine,
             conds.append(F.coalesce(F.sum(F.when(hit, 1).otherwise(0)),
                                     F.lit(0)).cast("long").alias(f"_b{i}"))
         row = perdoc.agg(*conds)
-    stack = ", ".join(
-        f"'{n}', " + (f"_b{i}" if union_terms else "CAST(0 AS BIGINT)")
-        for i, n in enumerate(names))
-    return (row.select(F.expr(
-        f"stack({len(names)}, {stack}) AS (bucket, doc_count)"))
-        .orderBy("bucket"))
+    pairs = [(n, F.col(f"_b{i}") if union_terms else F.lit(0).cast("long"))
+             for i, n in enumerate(names)]
+    return _unpivot(row, pairs, "bucket", "doc_count").orderBy("bucket")
 
 
 def _after_predicate(cols, after):
@@ -721,41 +727,6 @@ def search_composite_agg(eng: SearchEngine, query_text: str,
     return keyed.orderBy(*order).limit(size)
 
 
-def _driver_hit_ids(eng: SearchEngine, terms: list[str], mode: str,
-                    min_should_match: int | None) -> "object | None":
-    """The query's hit-set doc_ids computed DRIVER-SIDE from the decoded
-    posting blocks — exactly the candidate set the serving kernels
-    decode — or None when the candidate posting count exceeds
-    SEGMENT_FANOUT_CUTOFF (the engine's one cost model for what may
-    materialize on the driver).  Tombstone-masked.  Used by aggs whose
-    distributed shape can replace a shuffled semi-join with a broadcast
-    of these ids when the hit set is kernel-bounded."""
-    import numpy as np
-
-    from .topk import SEGMENT_FANOUT_CUTOFF, _block_arrays
-    from ..functions.encode import decode_blocks_into
-    meta = eng._term_meta(terms)
-    live = [t for t in terms if meta.get(t) is not None]
-    if not live:
-        return np.empty(0, dtype=np.int64)
-    if sum(meta[t][1] for t in live) >= SEGMENT_FANOUT_CUTOFF:
-        return None
-    by_term = eng._term_blocks(live)
-    decode_blocks_into([b for bl in by_term.values() for b in bl
-                        if "_arrs" not in b])
-    per_term = [np.concatenate([_block_arrays(b)[0] for b in bl])
-                for bl in by_term.values() if bl]
-    if not per_term:
-        return np.empty(0, dtype=np.int64)
-    ids, counts = np.unique(np.concatenate(per_term), return_counts=True)
-    need = len(terms) if mode == "and" else (min_should_match or 1)
-    ids = ids[counts >= need]
-    if eng.tombstones:
-        ids = ids[~np.isin(ids, np.fromiter(eng.tombstones,
-                                            dtype=np.int64))]
-    return ids.astype(np.int64)
-
-
 def search_significant_terms_agg(eng: SearchEngine, query_text: str,
                                  size: int = 10, mode: str = "or",
                                  min_should_match: int | None = None
@@ -787,8 +758,11 @@ def search_significant_terms_agg(eng: SearchEngine, query_text: str,
     if size <= 0:
         raise ValueError("size must be positive")
     terms = _query_terms(query_text, eng.cfg)
-    ids = _driver_hit_ids(eng, terms, mode, min_should_match) if terms \
-        else None
+    meta = eng._term_meta(terms)
+    ids = None
+    if terms and not eng.fans_out(
+            sum(m[1] for m in meta.values() if m is not None)):
+        ids, _ = eng.hit_set(terms, mode, min_should_match)
     if ids is not None:
         import pandas as pd
         if ids.size == 0:

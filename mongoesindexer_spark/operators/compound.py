@@ -34,10 +34,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.encode import decode_blocks_into
 from .multi_match import multi_match_topk
 from .topk import (SearchEngine, _check_k, _query_terms, get_engine,
-                   match_scores_arrays)
+                   rank_arrays)
 
 
 def dis_max_topk(spark: SparkSession, index_dirs: dict[str, str],
@@ -66,20 +65,6 @@ def dis_max_topk(spark: SparkSession, index_dirs: dict[str, str],
 # ---------------------------------------------------------------------------
 
 
-def _match_docs_kernel(eng: SearchEngine, query_text: str) -> np.ndarray:
-    """Sorted doc_ids matching ≥1 query term — the kernel-side match set
-    (block point reads, cost ∝ Σdf of the query's terms)."""
-    terms = _query_terms(query_text, eng.cfg)
-    meta = eng._term_meta(terms)
-    terms = [t for t in terms if meta.get(t) is not None]
-    by_term = eng._term_blocks(terms)
-    blocks = [b for bl in by_term.values() for b in bl]
-    decode_blocks_into([b for b in blocks if "_arrs" not in b])
-    if not blocks:
-        return np.empty(0, dtype=np.int64)
-    return np.unique(np.concatenate([b["_arrs"][0] for b in blocks]))
-
-
 def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
                   negative: str, k: int, negative_boost: float = 0.5,
                   locus: str = "kernel") -> pd.DataFrame:
@@ -87,9 +72,9 @@ def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
     (negative_boost if doc matches negative else 1)`` over the full
     positive match set, ties doc_id asc.
 
-    ``locus="kernel"``: score-all positive candidates
-    (:func:`..topk.match_scores_arrays`) + an ``np.isin`` demotion mask
-    from the negative match set — cost ∝ the two queries' Σdf, never the
+    ``locus="kernel"``: the positive query's hit set
+    (:meth:`..topk.SearchEngine.hit_set`) + an ``np.isin`` demotion mask
+    from the negative one — cost ∝ the two queries' Σdf, never the
     corpus.  ``locus="spark"``: the ``topk_df`` score frame left-joined
     to the negative match set (broadcast when small), demoted in
     codegen, TakeOrderedAndProject — the head-term-scale path.
@@ -104,29 +89,10 @@ def boosting_topk(spark: SparkSession, index_dir: str, positive: str,
                             negative_boost).toPandas()
     if locus != "kernel":
         raise ValueError("locus must be 'kernel' or 'spark'")
-    terms = _query_terms(positive, eng.cfg)
-    meta = eng._term_meta(terms)
-    td = {t: m[0] for t, m in meta.items() if m is not None}
-    terms = [t for t in terms if t in td]
-    by_term = eng._term_blocks(terms)
-    decode_blocks_into([b for bl in by_term.values() for b in bl
-                        if "_arrs" not in b])
-    uniq, bm25, _ = match_scores_arrays(
-        {t: (td[t], by_term[t]) for t in terms if t in by_term},
-        eng.avgdl, need_counts=False)
-    if uniq.size and eng.tombstones:
-        keep = ~np.isin(uniq, np.fromiter(eng.tombstones, dtype=np.int64))
-        uniq, bm25 = uniq[keep], bm25[keep]
-    if uniq.size == 0:
-        return pd.DataFrame(columns=["doc_id", "url", "score"])
-    neg = _match_docs_kernel(eng, negative)
+    uniq, bm25 = eng.hit_set(_query_terms(positive, eng.cfg))
+    neg, _ = eng.hit_set(_query_terms(negative, eng.cfg))
     score = np.where(np.isin(uniq, neg), bm25 * negative_boost, bm25)
-    order = np.lexsort((uniq, -score))[:k]
-    hits = [(float(score[i]), int(uniq[i])) for i in order]
-    urls = eng.fetch_urls([d for _, d in hits])
-    return pd.DataFrame(
-        [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame(rank_arrays(uniq, score, k))
 
 
 def _boosting_df(eng: SearchEngine, positive: str, negative: str, k: int,
@@ -138,23 +104,14 @@ def _boosting_df(eng: SearchEngine, positive: str, negative: str, k: int,
     positives."""
     from .aggs import match_set
     from .multi_match import _field_scores_df
-    pos = _field_scores_df(eng, positive, 1.0)
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        pos = pos.join(F.broadcast(ts), "doc_id", "left_anti")
+    pos = eng.live_df(_field_scores_df(eng, positive, 1.0))
     neg = match_set(eng, negative).withColumn("neg", F.lit(True))
     demoted = (pos.join(neg, "doc_id", "left")
                .withColumn("score",
                            F.when(F.col("neg"),
                                   F.col("score") * F.lit(negative_boost))
                            .otherwise(F.col("score"))))
-    urls = eng.cat.read(eng.spark, "doc_stats").select("doc_id", "url")
-    return (demoted.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.page_df(demoted, k)
 
 
 # ---------------------------------------------------------------------------

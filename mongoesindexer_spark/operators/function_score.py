@@ -8,8 +8,8 @@ be re-weighted.
 
 Two paths, rank-identical (tested):
 
-- ``locus="kernel"``: the vectorized score-all pass
-  (:func:`..topk.match_scores_arrays`) gives (doc, bm25) for every
+- ``locus="kernel"``: the engine's hit set
+  (:meth:`..topk.SearchEngine.hit_set`) gives (doc, bm25) for every
   candidate; the numeric doc values come from a CANDIDATE-BOUNDED point
   read of the doc-ordered ``fields`` table's ``<field>_num`` sub-field
   (the same read range-filter context uses — cost ∝ candidates, never
@@ -31,8 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import SearchEngine, _query_terms, get_engine, \
-    match_scores_arrays
+from .topk import (SearchEngine, _query_terms, filter_candidates,
+                   get_engine, rank_arrays)
 
 MODIFIERS = ("none", "log1p", "sqrt")
 BOOST_MODES = ("multiply", "sum")
@@ -67,28 +67,6 @@ def _check_numeric_sub(eng: SearchEngine, field: str) -> str:
     return sub
 
 
-def _kernel_candidates(eng: SearchEngine, query_text: str
-                       ) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_ids, bm25 scores) for every live candidate of the query —
-    the vectorized score-all pass shared by the rescoring entry points
-    (cost ∝ the query terms' Σdf, never the corpus)."""
-    terms = _query_terms(query_text, eng.cfg)
-    meta = eng._term_meta(terms)
-    td = {t: m[0] for t, m in meta.items() if m is not None}
-    terms = [t for t in terms if t in td]
-    by_term = eng._term_blocks(terms)
-    from ..functions.encode import decode_blocks_into
-    decode_blocks_into([b for bl in by_term.values() for b in bl
-                        if "_arrs" not in b])
-    uniq, bm25, _ = match_scores_arrays(
-        {t: (td[t], by_term[t]) for t in terms if t in by_term},
-        eng.avgdl, need_counts=False)
-    if uniq.size and eng.tombstones:
-        keep = ~np.isin(uniq, np.fromiter(eng.tombstones, dtype=np.int64))
-        uniq, bm25 = uniq[keep], bm25[keep]
-    return uniq, bm25
-
-
 def _candidate_values(eng: SearchEngine, uniq: np.ndarray, sub: str,
                       missing: float) -> np.ndarray:
     """Candidate-bounded point read of the doc-ordered ``fields``
@@ -97,16 +75,6 @@ def _candidate_values(eng: SearchEngine, uniq: np.ndarray, sub: str,
         [int(d) for d in uniq], ["doc_id", sub])
     vmap = vals.set_index("doc_id")[sub]
     return vmap.reindex(uniq).astype("float64").fillna(float(missing)).values
-
-
-def _topk_frame(eng: SearchEngine, uniq: np.ndarray, score: np.ndarray,
-                k: int) -> pd.DataFrame:
-    order = np.lexsort((uniq, -score))[:k]
-    hits = [(float(score[i]), int(uniq[i])) for i in order]
-    urls = eng.fetch_urls([d for _, d in hits])
-    return pd.DataFrame(
-        [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-        columns=["doc_id", "url", "score"])
 
 
 def function_score_topk(spark: SparkSession, index_dir: str,
@@ -124,17 +92,19 @@ def function_score_topk(spark: SparkSession, index_dir: str,
     eng = get_engine(spark, index_dir)
     sub = _check_numeric_sub(eng, field)
     if locus == "spark":
-        return _function_score_df(eng, query_text, k, sub, factor,
-                                  modifier, boost_mode, missing).toPandas()
+        return _weighted_df(
+            eng, query_text, k, sub, missing,
+            lambda c: _weight_col(c, factor, modifier),
+            boost_mode).toPandas()
     if locus != "kernel":
         raise ValueError("locus must be 'kernel' or 'spark'")
-    uniq, bm25 = _kernel_candidates(eng, query_text)
+    uniq, bm25 = eng.hit_set(_query_terms(query_text, eng.cfg))
     if uniq.size == 0:
         return pd.DataFrame(columns=["doc_id", "url", "score"])
     v = _candidate_values(eng, uniq, sub, missing)
     w = _weight_np(v, factor, modifier)
     score = bm25 * w if boost_mode == "multiply" else bm25 + w
-    return _topk_frame(eng, uniq, score, k)
+    return eng.hits_frame(rank_arrays(uniq, score, k))
 
 
 # ---------------------------------------------------------------------------
@@ -205,84 +175,38 @@ def decay_score_topk(spark: SparkSession, index_dir: str, query_text: str,
     eng = get_engine(spark, index_dir)
     sub = _check_numeric_sub(eng, field)
     if locus == "spark":
-        return _decay_score_df(eng, query_text, k, sub, fn, origin, scale,
-                               offset, decay, boost_mode,
-                               missing).toPandas()
+        return _weighted_df(
+            eng, query_text, k, sub, missing,
+            lambda c: _decay_col(c, fn, origin, scale, offset, decay),
+            boost_mode).toPandas()
     if locus != "kernel":
         raise ValueError("locus must be 'kernel' or 'spark'")
-    uniq, bm25 = _kernel_candidates(eng, query_text)
+    uniq, bm25 = eng.hit_set(_query_terms(query_text, eng.cfg))
     if uniq.size == 0:
         return pd.DataFrame(columns=["doc_id", "url", "score"])
     v = _candidate_values(eng, uniq, sub, missing)
     w = _decay_np(v, fn, origin, scale, offset, decay)
     score = bm25 * w if boost_mode == "multiply" else bm25 + w
-    return _topk_frame(eng, uniq, score, k)
+    return eng.hits_frame(rank_arrays(uniq, score, k))
 
 
-def _decay_score_df(eng: SearchEngine, query_text: str, k: int, sub: str,
-                    fn: str, origin: float, scale: float, offset: float,
-                    decay: float, boost_mode: str,
-                    missing: float) -> DataFrame:
-    """Distributed twin of the decay kernel path — the same plan as
-    ``_function_score_df`` with the decay weight in codegen."""
+def _weighted_df(eng: SearchEngine, query_text: str, k: int, sub: str,
+                 missing: float, weight, boost_mode: str) -> DataFrame:
+    """Distributed twin of the kernel paths: the topk_df-shaped BM25
+    frame joined to the fields numeric sub-field (one extra
+    broadcast-or-shuffle join), ``weight(value column)`` combined in
+    whole-stage codegen, TakeOrderedAndProject."""
     from .build_index import read_fields
     from .multi_match import _field_scores_df
-    bm25 = _field_scores_df(eng, query_text, 1.0) \
-        .withColumnRenamed("score", "bm25")
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        bm25 = bm25.join(F.broadcast(ts), "doc_id", "left_anti")
+    bm25 = eng.live_df(_field_scores_df(eng, query_text, 1.0)
+                       .withColumnRenamed("score", "bm25"))
     vals = read_fields(eng.cat, eng.spark).select("doc_id", sub)
-    w = _decay_col(F.coalesce(F.col(sub).cast("double"),
-                              F.lit(float(missing))),
-                   fn, origin, scale, offset, decay)
+    w = weight(F.coalesce(F.col(sub).cast("double"), F.lit(float(missing))))
     combined = (bm25.join(vals, "doc_id", "left")
                 .withColumn("score",
                             F.col("bm25") * w if boost_mode == "multiply"
                             else F.col("bm25") + w))
-    urls = eng.cat.read(eng.spark, "doc_stats").select("doc_id", "url")
-    return (combined.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
-
-
-def _function_score_df(eng: SearchEngine, query_text: str, k: int,
-                       sub: str, factor: float, modifier: str,
-                       boost_mode: str, missing: float) -> DataFrame:
-    """Distributed twin: the topk_df scoring frame joined to the fields
-    numeric sub-field; one extra broadcast-or-shuffle join over what
-    topk_df already does, combined in whole-stage codegen."""
-    from ..functions.encode import B, K1
-    from .build_index import read_fields, read_flat
-    terms = _query_terms(query_text, eng.cfg)
-    flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(terms))
-    if eng.tombstones:
-        ts = eng.spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
-    td = eng.cat.read(eng.spark, "term_dict").filter(F.col("term").isin(terms))
-    bm25 = (flat.join(F.broadcast(td.select("term", "idf")), "term")
-            .withColumn("contrib",
-                        F.col("idf") * F.col("tf") * (K1 + 1.0)
-                        / (F.col("tf") + K1 * (1.0 - B + B * F.col("doc_len")
-                                               / F.lit(eng.avgdl))))
-            .groupBy("doc_id").agg(F.sum("contrib").alias("bm25")))
-    vals = read_fields(eng.cat, eng.spark).select("doc_id", sub)
-    w = _weight_col(F.coalesce(F.col(sub).cast("double"),
-                               F.lit(float(missing))), factor, modifier)
-    combined = (bm25.join(vals, "doc_id", "left")
-                .withColumn("score",
-                            F.col("bm25") * w if boost_mode == "multiply"
-                            else F.col("bm25") + w))
-    urls = eng.cat.read(eng.spark, "doc_stats").select("doc_id", "url")
-    return (combined.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.page_df(combined, k)
 
 
 # ---------------------------------------------------------------------------
@@ -331,14 +255,14 @@ def rank_feature_topk(spark: SparkSession, index_dir: str,
         raise ValueError(f"{function} needs an explicit pivot")
     eng = get_engine(spark, index_dir)
     sub = _check_numeric_sub(eng, field)
-    uniq, bm25 = _kernel_candidates(eng, query_text)
+    uniq, bm25 = eng.hit_set(_query_terms(query_text, eng.cfg))
     if uniq.size == 0:
         return pd.DataFrame(columns=["doc_id", "url", "score"])
     v = _candidate_values(eng, uniq, sub, float("nan"))
     w = _rank_feature_np(v, function, pivot if pivot is not None
                          else 1.0, scaling_factor, exponent)
     w = np.where(np.isnan(v), 0.0, w)
-    return _topk_frame(eng, uniq, bm25 + boost * w, k)
+    return eng.hits_frame(rank_arrays(uniq, bm25 + boost * w, k))
 
 
 # ---------------------------------------------------------------------------
@@ -375,7 +299,7 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
       ``{"kind": "weight", "weight", "filter"}`` (pure weight function)
     ``filter``: ``(field, value)`` or ``(field, value, normalized)`` —
     any clause shape the engine's filter context accepts, resolved
-    CANDIDATE-BOUNDED per function (the same `_filter_allowed` path
+    CANDIDATE-BOUNDED per function (the same `filter_candidates` evaluator
     every serving filter uses, cost ∝ candidates per function)."""
     if score_mode not in FS_SCORE_MODES:
         raise ValueError(f"score_mode must be one of {FS_SCORE_MODES}")
@@ -384,7 +308,7 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
     if not functions:
         raise ValueError("function_score needs at least one function")
     eng = get_engine(spark, index_dir)
-    uniq, bm25 = _kernel_candidates(eng, query_text)
+    uniq, bm25 = eng.hit_set(_query_terms(query_text, eng.cfg))
     if uniq.size == 0:
         return pd.DataFrame(columns=["doc_id", "url", "score"])
     vals, weights, masks = [], [], []
@@ -414,8 +338,8 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
             fld, val, *nrm = flt
             sub_f, values = eng._resolve_filter(
                 fld, val, bool(nrm[0]) if nrm else False)
-            allowed = eng._filter_allowed(uniq, sub_f, values)
-            mask = np.isin(uniq, allowed)
+            mask = np.isin(uniq, filter_candidates(
+                uniq, [(sub_f, values)], eng._read_fields))
         else:
             mask = np.ones(uniq.size, dtype=bool)
         vals.append(w * f)
@@ -472,4 +396,4 @@ def function_score_compose_topk(spark: SparkSession, index_dir: str,
         uniq, score = uniq[keep], score[keep]
         if uniq.size == 0:
             return pd.DataFrame(columns=["doc_id", "url", "score"])
-    return _topk_frame(eng, uniq, score, k)
+    return eng.hits_frame(rank_arrays(uniq, score, k))

@@ -58,9 +58,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.encode import decode_blocks_into
-from .topk import (EXHAUSTIVE_CUTOFF, K1, B, SearchEngine, _check_k,
-                   _query_terms, _TermCursor, get_engine,
-                   match_scores_arrays)
+from . import topk
+from .topk import (K1, B, SearchEngine, _check_k, _query_terms, _TermCursor,
+                   get_engine, match_scores_arrays, rank_arrays)
 
 MODES = ("best_fields", "most_fields")
 
@@ -167,10 +167,7 @@ def multimatch_exhaustive_arrays(field_blocks: list[tuple[dict, float]],
     if tombstones:
         keep = ~np.isin(union, np.fromiter(tombstones, dtype=np.int64))
         union, score = union[keep], score[keep]
-    if union.size == 0:
-        return []
-    order = np.lexsort((union, -score))[:k]
-    return [(float(score[i]), int(union[i])) for i in order]
+    return rank_arrays(union, score, k)
 
 
 def multimatch_wand_arrays(field_cursors: list[tuple[float,
@@ -358,13 +355,7 @@ def multi_match_df(engines: dict[str, SearchEngine],
                                  x["fi"] == -F.col("b.nfi"), zero)
                              .otherwise(x["score"])))
                         .alias("score")))
-    first = next(iter(engines.values()))
-    urls = first.cat.read(first.spark, "doc_stats").select("doc_id", "url")
-    return (combined
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            .join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return next(iter(engines.values())).page_df(combined, k)
 
 
 # ---------------------------------------------------------------------------
@@ -417,7 +408,7 @@ def multi_match_topk(spark: SparkSession, index_dirs: dict[str, str],
     if use_wand is None:
         n_cand = sum(b["n"] for tb, _ in field_blocks
                      for _, bl in tb.values() for b in bl)
-        use_wand = n_cand >= EXHAUSTIVE_CUTOFF
+        use_wand = n_cand >= topk.EXHAUSTIVE_CUTOFF
     if use_wand:
         field_cursors = [
             (avgdl, [_TermCursor(idf, bl, avgdl)
@@ -428,8 +419,4 @@ def multi_match_topk(spark: SparkSession, index_dirs: dict[str, str],
     else:
         hits = multimatch_exhaustive_arrays(field_blocks, k, mtype,
                                             tie_breaker, tombs)
-    first = next(iter(engines.values()))
-    urls = first.fetch_urls([d for _, d in hits])
-    return pd.DataFrame(
-        [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-        columns=["doc_id", "url", "score"])
+    return next(iter(engines.values())).hits_frame(hits)

@@ -33,8 +33,9 @@ Execution loci:
 - :func:`simple_query_string_topk` — the serving path: driver kernel
   over the decoded posting blocks (vectorized numpy, no Spark job),
   phrases via the positional phrase kernel restricted to the candidate
-  set.  Gated by the engine's one driver cost model: Σ df of every
-  referenced term must stay under SEGMENT_FANOUT_CUTOFF; above it,
+  set.  Gated by the engine's one driver cost model
+  (:meth:`..topk.SearchEngine.fans_out` on the Σ df of every
+  referenced term); above it,
   term-only queries transparently fall back to the distributed locus,
   phrase-bearing queries raise with the cutoff named (the fan-out
   phrase kernel scores pure phrases, not mixed term+phrase sums — a
@@ -52,8 +53,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .topk import (B, K1, SEGMENT_FANOUT_CUTOFF, SearchEngine,
-                   _block_arrays, get_engine, phrase_topk_arrays)
+from .topk import (B, K1, SearchEngine, _block_arrays, get_engine,
+                   phrase_topk_arrays, rank_arrays)
 from ..functions.analysis import analyze_search
 from ..functions.encode import decode_blocks_into
 
@@ -122,6 +123,36 @@ def _term_docs(eng: SearchEngine, by_term: dict, t: str) -> np.ndarray:
     return np.concatenate([_block_arrays(b)[0] for b in bl])
 
 
+def _scored_parts(eng: SearchEngine, by_term: dict, idf: dict,
+                  terms, cand: np.ndarray) -> tuple[list, list]:
+    """Per scored term, in order: the BM25 contributions of its
+    postings inside ``cand`` as parallel (docs, scores) parts."""
+    doc_parts, score_parts = [], []
+    for t in terms:
+        bl = sorted(by_term.get(t) or [], key=lambda b: b["first_doc"])
+        if not bl:
+            continue
+        docs, tfs, dls = (np.concatenate([_block_arrays(b)[i] for b in bl])
+                          for i in range(3))
+        m = np.isin(docs, cand)
+        tf = tfs[m].astype(np.float64)
+        dl = dls[m].astype(np.float64)
+        doc_parts.append(docs[m])
+        score_parts.append(idf[t] * tf * (K1 + 1.0) / (
+            tf + K1 * (1.0 - B + B * dl / eng.avgdl)))
+    return doc_parts, score_parts
+
+
+def _summed_page(eng: SearchEngine, doc_parts: list, score_parts: list,
+                 k: int) -> pd.DataFrame:
+    """Sum the clause parts per doc (in part order — the float
+    contract) and finish the top-k page."""
+    uniq, inv = np.unique(np.concatenate(doc_parts), return_inverse=True)
+    agg = np.zeros(uniq.size, dtype=np.float64)
+    np.add.at(agg, inv, np.concatenate(score_parts))
+    return eng.hits_frame(rank_arrays(uniq, agg, k))
+
+
 def simple_query_string_topk(spark: SparkSession, index_dir: str,
                              query: str, k: int,
                              default_operator: str = "or"
@@ -146,12 +177,12 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
     if any(meta.get(t) is None for t in must):
         return empty            # a required term absent from the corpus
     total_df = sum(m[1] for m in meta.values() if m is not None)
-    if total_df >= SEGMENT_FANOUT_CUTOFF:
+    if eng.fans_out(total_df):
         if phrases:
             raise ValueError(
                 "simple_query_string with phrase clauses exceeds the "
                 f"driver candidate budget (Σdf {total_df} ≥ "
-                f"{SEGMENT_FANOUT_CUTOFF}); narrow the query or drop "
+                "SEGMENT_FANOUT_CUTOFF); narrow the query or drop "
                 "the quoted phrases (term clauses fall back to the "
                 "distributed locus automatically)")
         return simple_query_string_df(
@@ -212,23 +243,8 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
 
     # score = Σ scored-term BM25 contribs + Σ scored-phrase scores,
     # restricted to candidates (one vectorized pass per clause)
-    doc_parts, score_parts = [], []
-    for t in sorted(must | should):
-        bl = sorted(by_term.get(t) or [], key=lambda b: b["first_doc"])
-        if not bl:
-            continue
-        docs = np.concatenate([_block_arrays(b)[0] for b in bl])
-        tfs = np.concatenate([_block_arrays(b)[1] for b in bl]) \
-            .astype(np.float64)
-        dls = np.concatenate([_block_arrays(b)[2] for b in bl]) \
-            .astype(np.float64)
-        m = np.isin(docs, cand)
-        if not m.any():
-            continue
-        contrib = idf[t] * tfs[m] * (K1 + 1.0) / (
-            tfs[m] + K1 * (1.0 - B + B * dls[m] / eng.avgdl))
-        doc_parts.append(docs[m])
-        score_parts.append(contrib)
+    doc_parts, score_parts = _scored_parts(eng, by_term, idf,
+                                           sorted(must | should), cand)
     for kind, pd_arr, ps_arr in phrase_hits:
         if kind == "not":
             continue
@@ -237,17 +253,7 @@ def simple_query_string_topk(spark: SparkSession, index_dir: str,
         score_parts.append(ps_arr[m])
     if not doc_parts:
         return empty
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    agg = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(agg, inv, scores)
-    order = np.lexsort((uniq, -agg))[:k]
-    urls = eng.fetch_urls([int(uniq[i]) for i in order])
-    return pd.DataFrame(
-        [{"doc_id": int(uniq[i]), "url": urls.get(int(uniq[i])),
-          "score": float(agg[i])} for i in order],
-        columns=["doc_id", "url", "score"])
+    return _summed_page(eng, doc_parts, score_parts, k)
 
 
 def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
@@ -285,22 +291,23 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
     vocab = eng._rg_index("term_dict", "term").read_range(
         prefix, prefix + _HI, ["term", "df"])
     expansions = sorted(vocab["term"].astype(str).tolist())
-    # enforce the driver budget the docstring promises: the prefix
-    # clause's doc-set union decodes the expansions' postings
-    # driver-side, so Σ df must fit the kernel locus — a head-prefix
-    # autocomplete at corpus scale belongs on the completion table (T7)
-    pref_df_sum = int(vocab["df"].sum()) if len(vocab) else 0
-    if pref_df_sum >= SEGMENT_FANOUT_CUTOFF:
+    meta = eng._term_meta(full) if full else {}
+    live = [t for t in full if meta.get(t) is not None]
+    # enforce the driver budget the docstring promises: the term
+    # clauses' postings and the prefix clause's doc-set union both
+    # decode driver-side, so their Σ df must fit the kernel locus — a
+    # head-prefix autocomplete at corpus scale belongs on the completion
+    # table (T7)
+    total_df = int(vocab["df"].sum()) + sum(meta[t][1] for t in live)
+    if eng.fans_out(total_df):
         raise ValueError(
-            f"prefix {prefix!r} expands to Σdf {pref_df_sum} ≥ "
-            f"{SEGMENT_FANOUT_CUTOFF} postings — too broad for the "
+            f"{query!r} (prefix {prefix!r}) reaches Σdf {total_df} ≥ "
+            "SEGMENT_FANOUT_CUTOFF postings — too broad for the "
             "driver locus; serve broad autocomplete from the "
             "completion table (SearchEngine.suggest, T7) or lengthen "
             "the prefix")
     pref_docs = _terms_doc_set(eng, expansions)["doc_id"] \
         .to_numpy(np.int64)
-    meta = eng._term_meta(full) if full else {}
-    live = [t for t in full if meta.get(t) is not None]
     if operator == "and" and (len(live) < len(full)
                               or pref_docs.size == 0):
         return empty
@@ -313,40 +320,18 @@ def match_bool_prefix_topk(spark: SparkSession, index_dir: str,
             cand = np.intersect1d(cand, _term_docs(eng, by_term, t),
                                   assume_unique=True)
     else:
-        parts = [pref_docs] + [_term_docs(eng, by_term, t)
-                               for t in live]
-        cand = np.unique(np.concatenate(parts)) if parts else \
-            np.empty(0, np.int64)
+        cand = np.unique(np.concatenate(
+            [pref_docs] + [_term_docs(eng, by_term, t) for t in live]))
     if eng.tombstones and cand.size:
         cand = cand[~np.isin(cand, np.fromiter(eng.tombstones,
                                                dtype=np.int64))]
     if cand.size == 0:
         return empty
-    doc_parts = [pref_docs[np.isin(pref_docs, cand)]]
-    score_parts = [np.ones(doc_parts[0].size, dtype=np.float64)]
-    for t in live:
-        bl = sorted(by_term[t], key=lambda b: b["first_doc"])
-        docs = np.concatenate([_block_arrays(b)[0] for b in bl])
-        tfs = np.concatenate([_block_arrays(b)[1] for b in bl]) \
-            .astype(np.float64)
-        dls = np.concatenate([_block_arrays(b)[2] for b in bl]) \
-            .astype(np.float64)
-        m = np.isin(docs, cand)
-        contrib = meta[t][0] * tfs[m] * (K1 + 1.0) / (
-            tfs[m] + K1 * (1.0 - B + B * dls[m] / eng.avgdl))
-        doc_parts.append(docs[m])
-        score_parts.append(contrib)
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    agg = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(agg, inv, scores)
-    order = np.lexsort((uniq, -agg))[:k]
-    urls = eng.fetch_urls([int(uniq[i]) for i in order])
-    return pd.DataFrame(
-        [{"doc_id": int(uniq[i]), "url": urls.get(int(uniq[i])),
-          "score": float(agg[i])} for i in order],
-        columns=["doc_id", "url", "score"])
+    pref_hit = pref_docs[np.isin(pref_docs, cand)]
+    doc_parts, score_parts = _scored_parts(
+        eng, by_term, {t: meta[t][0] for t in live}, live, cand)
+    return _summed_page(eng, [pref_hit] + doc_parts,
+                        [np.ones(pref_hit.size)] + score_parts, k)
 
 
 def terms_set_topk(spark: SparkSession, index_dir: str,
@@ -384,10 +369,7 @@ def terms_set_topk(spark: SparkSession, index_dir: str,
     fields = read_fields(eng.cat, eng.spark).select(
         "doc_id", F.col(sub).alias("_msm"))
     flat = read_flat(eng.cat, eng.spark).filter(F.col("term").isin(uniq))
-    if eng.tombstones:
-        ts = spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = eng.live_df(flat)
     td = eng.cat.read(spark, "term_dict") \
         .filter(F.col("term").isin(uniq)).select("term", "idf")
     contrib = (F.col("idf") * F.col("tf") * (K1 + 1.0)
@@ -402,12 +384,7 @@ def terms_set_topk(spark: SparkSession, index_dir: str,
     keep = agg.join(fields, "doc_id") \
         .filter(F.col("_msm").isNotNull()
                 & (F.col("n_matched") >= thresh))
-    topk = (keep.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    urls = eng.cat.read(spark, "doc_stats").select("doc_id", "url")
-    return (topk.join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.page_df(keep, k)
 
 
 def simple_query_string_df(spark: SparkSession, index_dir: str,
@@ -433,10 +410,7 @@ def simple_query_string_df(spark: SparkSession, index_dir: str,
             [], "doc_id long, url string, score double")
     flat = read_flat(eng.cat, eng.spark) \
         .filter(F.col("term").isin(all_terms))
-    if eng.tombstones:
-        ts = spark.createDataFrame(
-            [(int(d),) for d in sorted(eng.tombstones)], "doc_id long")
-        flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+    flat = eng.live_df(flat)
     td = eng.cat.read(spark, "term_dict") \
         .filter(F.col("term").isin(scored)).select("term", "idf")
     scored_c = F.col("term").isin(scored)
@@ -456,9 +430,4 @@ def simple_query_string_df(spark: SparkSession, index_dir: str,
     keep = (F.col("n_must") == len(must)) & (F.col("excluded") == 0)
     if not must:
         keep = keep & (F.col("n_scored") >= 1)
-    topk = (agg.filter(keep).select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    urls = eng.cat.read(spark, "doc_stats").select("doc_id", "url")
-    return (topk.join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score"))
+    return eng.page_df(agg.filter(keep), k)

@@ -32,7 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from .topk import (B, K1, _block_arrays, _block_positions, get_engine)
+from .topk import (B, K1, _block_arrays, _block_positions, get_engine,
+                   rank_arrays)
 from ..functions.analysis import analyze_search
 
 
@@ -64,11 +65,10 @@ def span_first_topk(spark: SparkSession, index_dir: str, term: str,
     meta = eng._term_meta([t])
     if meta.get(t) is None:
         return empty
-    from .topk import SEGMENT_FANOUT_CUTOFF
-    if meta[t][1] >= SEGMENT_FANOUT_CUTOFF:
+    if eng.fans_out(meta[t][1]):
         raise ValueError(
             f"span_first on {t!r} (df {meta[t][1]}) exceeds the driver "
-            f"candidate budget ({SEGMENT_FANOUT_CUTOFF}) — a head term's "
+            "candidate budget (SEGMENT_FANOUT_CUTOFF) — a head term's "
             "blocks must not decode driver-side; a per-segment "
             "span_first kernel is the fan-out extension point")
     idf = meta[t][0]
@@ -107,9 +107,4 @@ def span_first_topk(spark: SparkSession, index_dir: str, term: str,
         return empty
     scores = idf * tfs * (K1 + 1.0) / (
         tfs + K1 * (1.0 - B + B * dls / eng.avgdl))
-    order = np.lexsort((docs, -scores))[:k]
-    urls = eng.fetch_urls([int(docs[i]) for i in order])
-    return pd.DataFrame(
-        [{"doc_id": int(docs[i]), "url": urls.get(int(docs[i])),
-          "score": float(scores[i])} for i in order],
-        columns=["doc_id", "url", "score"])
+    return eng.hits_frame(rank_arrays(docs, scores, k))

@@ -72,11 +72,9 @@ def pair_cf(eng: SearchEngine, a: str, b: str) -> int:
     # (Stupid Backoff exists because higher-order evidence is sometimes
     # unavailable), so the suggester stays total-cost bounded instead
     # of failing on common left-contexts.
-    from .topk import SEGMENT_FANOUT_CUTOFF
     meta = eng._term_meta([a, b])
     if any(meta.get(t) is None for t in (a, b)) or \
-            sum(m[1] for m in meta.values() if m is not None) \
-            >= SEGMENT_FANOUT_CUTOFF:
+            eng.fans_out(sum(m[1] for m in meta.values())):
         cache[(a, b)] = 0
         return 0
     by_term = eng._term_blocks([a, b])

@@ -16,10 +16,13 @@ Determinism: ties broken by doc_id asc everywhere; float64 end-to-end.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import itertools
+import math
 import os
 from collections import OrderedDict
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -174,20 +177,19 @@ class _RowGroupIndex:
         return self._finish(tbl, mask, columns)
 
 
-class RangeClause(__import__("typing").NamedTuple):
+class RangeClause(NamedTuple):
     """ES ``range`` query in filter context (``bool.filter: {range:
     {field: {gte, lte}}}``): pass as ``filter_value`` with the numeric
     field's name — resolves against the ``<field>_num`` long sub-field
     (IndexBuilder ``numeric_fields``; dates are epoch millis).  Bounds
     are INCLUSIVE (gte/lte); docs missing the value never match, like
-    ES.  Candidate-bounded resolution everywhere: the fields point-read
-    filters candidates by the bounds, the fan-out tasks push the range
-    into their span-pruned parquet read."""
+    ES.  Candidate-bounded resolution on every path
+    (:func:`filter_candidates`)."""
     lo: int
     hi: int
 
 
-class ExistsClause(__import__("typing").NamedTuple):
+class ExistsClause(NamedTuple):
     """ES ``exists`` query in filter context (``bool.filter: {exists:
     {field}}``): docs whose sub-field carries a non-null doc value.
     ``kind`` picks the sub-field family the mapping indexed —
@@ -200,7 +202,7 @@ class ExistsClause(__import__("typing").NamedTuple):
     kind: str = "keyword"
 
 
-class MustNotClause(__import__("typing").NamedTuple):
+class MustNotClause(NamedTuple):
     """ES ``bool.must_not`` in filter context (``bool: {must: match,
     must_not: {...}}``): EXCLUDE docs matching the inner clause, never
     affecting scores — the complement of the equivalent ``filter``
@@ -347,6 +349,59 @@ class SearchEngine:
             [int(d) for d in doc_ids], ["doc_id", "url"])
         return dict(zip(pdf["doc_id"].values, pdf["url"].values))
 
+    def hits_frame(self, hits: list[tuple[float, int]]) -> pd.DataFrame:
+        """The one result finisher: ``[(score, doc_id)]`` best-first →
+        the serving frame ``(doc_id, url, score)``, urls point-fetched
+        for the page in one read."""
+        urls = self.fetch_urls([d for _, d in hits])
+        return pd.DataFrame(
+            [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
+            columns=["doc_id", "url", "score"])
+
+    def fans_out(self, total_df: int) -> bool:
+        """The one driver-vs-fan-out decision: a query whose candidate
+        postings (Σ df over its terms, from term_dict) reach
+        SEGMENT_FANOUT_CUTOFF must not materialize them driver-side.
+        The cutoff is read at call time, so every surface moves with
+        it."""
+        return total_df >= SEGMENT_FANOUT_CUTOFF
+
+    def hit_set(self, terms: list[str], mode: str = "or",
+                min_should_match: int | None = None
+                ) -> tuple[np.ndarray, np.ndarray]:
+        """The query's live hit set computed DRIVER-SIDE: ``(doc_ids,
+        bm25)`` doc_id-sorted, tombstone-masked — the one hit-set
+        primitive of the kernel-locus operators (function_score,
+        boosting, aggs).  ``terms`` are analyzed query terms; ``mode``
+        and ``min_should_match`` validate and filter exactly like the
+        distributed twin ``aggs.match_set``.  Cost ∝ the terms' Σ df —
+        callers check :meth:`fans_out` first."""
+        if min_should_match is not None and mode == "and":
+            raise ValueError("min_should_match applies to mode='or' "
+                             "(mode='and' is already all-clauses)")
+        meta = self._term_meta(terms)
+        live = [t for t in terms if meta.get(t) is not None]
+        if mode == "and" and len(live) < len(terms):
+            live = []       # a dead term ⇒ no doc holds every term
+        by_term = self._term_blocks(live)
+        decode_blocks_into([b for bl in by_term.values() for b in bl
+                            if "_arrs" not in b])
+        docs, scores, counts = match_scores_arrays(
+            {t: (meta[t][0], by_term[t]) for t in live if t in by_term},
+            self.avgdl,
+            need_counts=mode == "and" or min_should_match is not None)
+        if mode == "and":
+            keep = counts == len(terms)
+            docs, scores = docs[keep], scores[keep]
+        elif min_should_match is not None:
+            keep = counts >= min_should_match
+            docs, scores = docs[keep], scores[keep]
+        if docs.size and self.tombstones:
+            keep = ~np.isin(docs, np.fromiter(self.tombstones,
+                                              dtype=np.int64))
+            docs, scores = docs[keep], scores[keep]
+        return docs, scores
+
     def version(self) -> tuple:
         return self._version
 
@@ -404,10 +459,7 @@ class SearchEngine:
                 else:
                     keep = fsrc.filter(pred).select("doc_id")
                     flat = flat.join(keep, "doc_id", "semi")
-        if self.tombstones:
-            ts = self.spark.createDataFrame(
-                [(int(d),) for d in self.tombstones], "doc_id long")
-            flat = flat.join(F.broadcast(ts), "doc_id", "left_anti")
+        flat = self.live_df(flat)
         td = self.cat.read(self.spark, "term_dict").filter(F.col("term").isin(terms))
         scored = (
             flat.join(F.broadcast(td.select("term", "idf")), "term")
@@ -430,17 +482,27 @@ class SearchEngine:
             scored = scored.filter(
                 (F.col("score") < F.lit(s0))
                 | ((F.col("score") == F.lit(s0)) & (F.col("doc_id") > d0)))
-        topk = (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self.page_df(scored, k)
+
+    def live_df(self, df: DataFrame) -> DataFrame:
+        """Merge-on-read tombstone mask for an analytics frame: a
+        broadcast anti-join on doc_id (no-op without tombstones)."""
+        if not self.tombstones:
+            return df
+        ts = self.spark.createDataFrame(
+            [(int(d),) for d in sorted(self.tombstones)], "doc_id long")
+        return df.join(F.broadcast(ts), "doc_id", "left_anti")
+
+    def page_df(self, scored: DataFrame, k: int) -> DataFrame:
+        """The analytics-path finisher: top-k of a ``(doc_id, score)``
+        frame (TakeOrderedAndProject, ties doc_id asc), urls joined for
+        the k winners only → ``(doc_id, url, score)``."""
+        top = (scored.select("doc_id", "score")
+               .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         urls = self.cat.read(self.spark, "doc_stats").select("doc_id", "url")
-        return (
-            topk.join(urls, "doc_id", "left")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "url", "score")
-        )
+        return (top.join(urls, "doc_id", "left")
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .select("doc_id", "url", "score"))
 
     # -- block-max WAND path ---------------------------------------------------
     def _read_filtered(self, table: str, terms: list[str],
@@ -493,21 +555,35 @@ class SearchEngine:
         engine's tombstone set; compact folds the sidecar clean before
         clearing that set."""
         from ..functions.analysis import normalize
-        from .build_index import sidecar_table
         _check_k(size)
+        _sub, idx = self._sidecar(field, normalized)
+        values = [value] if isinstance(value, str) else list(value)
+        if normalized:
+            values = [normalize(v) for v in values]
+        # each doc carries exactly one value per sub-field, so the OR over
+        # deduped query values can never emit a doc twice
+        return self._keyword_page(
+            idx.read_isin(sorted(set(values)), ["doc_id"]), size,
+            after_doc_id)
+
+    def _sidecar(self, field: str, normalized: bool
+                 ) -> tuple[str, _RowGroupIndex]:
+        """``(subcol, directory)`` of a keyword sub-field's value-sorted
+        point-read sidecar."""
+        from .build_index import sidecar_table
         sub = f"{field}_normalized" if normalized else f"{field}_keyword"
         table = sidecar_table(sub)
         if not self.cat.table_exists(table):
             raise KeyError(
                 f"no point-read sidecar {table!r} — was the index built "
                 f"with keyword_fields=({field!r},)?")
-        values = [value] if isinstance(value, str) else list(value)
-        if normalized:
-            values = [normalize(v) for v in values]
-        # each doc carries exactly one value per sub-field, so the OR over
-        # deduped query values can never emit a doc twice
-        pdf = self._rg_index(table, sub).read_isin(sorted(set(values)),
-                                                   ["doc_id"])
+        return sub, self._rg_index(table, sub)
+
+    def _keyword_page(self, pdf: pd.DataFrame, size: int,
+                      after_doc_id: int | None) -> pd.DataFrame:
+        """The keyword page contract over matched sidecar rows:
+        (doc_id, url), doc_id asc, ``size``-bounded, only doc_ids
+        strictly above ``after_doc_id``, tombstone-masked."""
         floor = -1 if after_doc_id is None else int(after_doc_id)
         ids = sorted(int(d) for d in pdf["doc_id"].values
                      if int(d) > floor
@@ -523,18 +599,9 @@ class SearchEngine:
         :meth:`keyword_prefix`: a row-group-pruned ``[lo, hi)`` RANGE
         READ of the value-sorted sidecar (no Spark job — exactly how ES
         serves keyword range/prefix from the field's terms index), then
-        the :meth:`keyword_term` page contract — (doc_id, url), doc_id
-        asc, ``size``-bounded, ``after_doc_id`` paging,
-        tombstone-masked."""
-        from .build_index import sidecar_table
+        the :meth:`keyword_term` page contract."""
         _check_k(size)
-        sub = f"{field}_normalized" if normalized else f"{field}_keyword"
-        table = sidecar_table(sub)
-        if not self.cat.table_exists(table):
-            raise KeyError(
-                f"no point-read sidecar {table!r} — was the index built "
-                f"with keyword_fields=({field!r},)?")
-        idx = self._rg_index(table, sub)
+        _sub, idx = self._sidecar(field, normalized)
         # serving budget: the value window's overlapping row groups
         # bound what the gather can materialize driver-side (footer
         # stats only — nothing read yet).  A corpus-wide window belongs
@@ -551,14 +618,8 @@ class SearchEngine:
                 "— too broad for the point-read serving path; narrow "
                 "the bounds or use the Spark analytics path "
                 "(operators.keyword.keyword_match)")
-        pdf = idx.read_range(lo, hi, ["doc_id"])
-        floor = -1 if after_doc_id is None else int(after_doc_id)
-        ids = sorted(int(d) for d in pdf["doc_id"].values
-                     if int(d) > floor
-                     and int(d) not in self.tombstones)[:size]
-        urls = self.fetch_urls(ids)
-        return pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                             "url": [urls.get(i) for i in ids]})
+        return self._keyword_page(idx.read_range(lo, hi, ["doc_id"]), size,
+                                  after_doc_id)
 
     def keyword_range(self, field: str, gte: str | None = None,
                       lte: str | None = None, normalized: bool = False,
@@ -653,50 +714,12 @@ class SearchEngine:
                                             else False))
         return out or None
 
-    def _filter_allowed_list(self, cand: "np.ndarray",
-                             clauses) -> "np.ndarray":
-        """Conjunction fold of :meth:`_filter_allowed` — each clause
-        restricts the previous clause's survivors, so cost stays
-        candidate-bounded and shrinks per clause."""
-        for sub, values in clauses:
-            if cand.size == 0:
-                break
-            cand = self._filter_allowed(cand, sub, values)
-        return cand
-
-    def _filter_allowed(self, cand: "np.ndarray", sub: str,
-                        values: list) -> "np.ndarray":
-        """ES filter-context resolution, CANDIDATE-BOUNDED: the sorted
-        doc_ids among ``cand`` whose ``fields.<sub>`` equals one of
-        ``values``.
-
-        The membership check point-reads the doc-ordered ``fields`` table
-        for the candidate ids — cost ∝ |candidates| (itself bounded by
-        SEGMENT_FANOUT_CUTOFF on the driver path), NEVER ∝ the filter's
-        match count: a broad filter (lang='en' ≈ 60% of a 10^12-doc
-        corpus) must not materialize billions of ids driver-side the way
-        reading the value-sorted sidecar would.  ES resolves the same
-        clause per segment from the keyword field's index; our per-range
-        analog is the fan-out task's range-pruned read
-        (:meth:`topk_segments`)."""
-        if cand.size == 0:
-            return cand.astype(np.int64)
-        if isinstance(values, MustNotClause):
-            # must_not = complement within the candidates: docs whose
-            # sub-field is NULL/absent never match the inner clause, so
-            # they survive — exactly ES (see MustNotClause)
-            banned = self._filter_allowed(cand, sub, values.inner)
-            return np.setdiff1d(cand.astype(np.int64), banned)
-        pdf = self._rg_index("fields", "doc_id").read_isin(
-            [int(d) for d in cand], ["doc_id", sub])
-        if isinstance(values, RangeClause):
-            v = pdf[sub]
-            hit = pdf[(v >= values.lo) & (v <= values.hi)]
-        elif isinstance(values, ExistsClause):
-            hit = pdf[pdf[sub].notna()]
-        else:
-            hit = pdf[pdf[sub].isin(values)]
-        return np.unique(hit["doc_id"].values.astype(np.int64))
+    def _read_fields(self, ids: np.ndarray, subs: list[str]
+                     ) -> pd.DataFrame:
+        """:func:`filter_candidates` reader over the engine's resident
+        ``fields`` directory: the doc-ordered rows of ``ids`` only."""
+        return self._rg_index("fields", "doc_id").read_isin(
+            ids.tolist(), ["doc_id", *subs])
 
     def _term_meta(self, terms: list[str]) -> dict:
         """term → (idf, df) | None via a bounded LRU over term_dict point
@@ -805,9 +828,9 @@ class SearchEngine:
         load.service.ts:151-166) — restrict the scored result to docs
         whose keyword sub-field equals ``filter_value`` (or ANY of a
         list, ES ``terms``).  Non-scoring, like ES filter context.  The
-        filter resolves candidate-bounded (:meth:`_filter_allowed`) on
-        the driver path and range-pruned per task on the fan-out path —
-        never ∝ the filter's corpus-wide match count.
+        filter resolves candidate-bounded on both paths
+        (:func:`filter_candidates`) — never ∝ the filter's corpus-wide
+        match count.
 
         ``analyzed_terms``: bypass the search analyzer and score these
         index-vocabulary terms directly (deduplicated, sorted) — the
@@ -824,9 +847,7 @@ class SearchEngine:
                              "(mode='and' is already all-clauses)")
         analyzed = sorted(set(analyzed_terms)) if analyzed_terms is not None \
             else _query_terms(query_text, self.cfg)
-        if not analyzed:
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
-        meta = self._term_meta(analyzed)
+        meta = self._term_meta(analyzed) if analyzed else {}
         td = {t: m[0] for t, m in meta.items() if m is not None}
         # drop terms with no term_dict row NOW: a fully-tombstoned term
         # loses its dictionary row at sync (exact delta arithmetic) but
@@ -837,63 +858,24 @@ class SearchEngine:
         # contain every term (same as topk_df, whose n_terms count can
         # never reach len(analyzed))
         if not terms or (mode == "and" and len(terms) < len(analyzed)):
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
+            return self.hits_frame([])
         flt = self._resolve_filter_list(filter_field, filter_value,
                                         filter_normalized, filters)
         if use_segments is None:
-            total_df = sum(m[1] for m in meta.values() if m is not None)
-            use_segments = total_df >= SEGMENT_FANOUT_CUTOFF
+            use_segments = self.fans_out(
+                sum(m[1] for m in meta.values() if m is not None))
         if use_segments:
             return self.topk_segments(terms, td, k, mode=mode,
                                       search_after=search_after,
                                       filter_clause=flt,
                                       min_should=min_should_match)
-        by_term = self._term_blocks(terms)
-        if mode == "and" and len(by_term) < len(terms):
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
-        if use_wand is None:
-            n_cand = sum(b["n"] for bl in by_term.values() for b in bl)
-            use_wand = n_cand >= EXHAUSTIVE_CUTOFF
-        # batch-decode every not-yet-decoded block in three vectorized
-        # passes (cached blocks keep their arrays across queries)
-        decode_blocks_into([b for bl in by_term.values() for b in bl
-                            if "_arrs" not in b])
-        allowed_arr = allowed_set = None
-        if flt is not None:
-            cand = [_block_arrays(b)[0] for bl in by_term.values() for b in bl]
-            allowed_arr = self._filter_allowed_list(
-                np.unique(np.concatenate(cand)) if cand
-                else np.empty(0, np.int64), flt)
-            if allowed_arr.size == 0:
-                return pd.DataFrame(columns=["doc_id", "url", "score"])
-            allowed_set = frozenset(allowed_arr.tolist())
-        if use_wand:
-            cursors = [_TermCursor(td[t], by_term[t], self.avgdl)
-                       for t in terms if t in by_term]
-            if not cursors:
-                hits = []
-            elif mode == "and":
-                hits = conjunctive_topk_arrays(cursors, self.avgdl, k,
-                                               self.tombstones,
-                                               after=search_after,
-                                               allowed=allowed_set)
-            else:
-                hits = wand_topk_arrays(cursors, self.avgdl, k,
-                                        self.tombstones,
-                                        after=search_after,
-                                        allowed=allowed_set,
-                                        min_should=min_should_match)
-        else:
-            hits = exhaustive_topk_arrays(
-                {t: (td[t], by_term[t]) for t in terms if t in by_term},
-                self.avgdl, k, self.tombstones,
-                require_all=(mode == "and"), after=search_after,
-                allowed=allowed_arr, min_should=min_should_match)
-        urls = self.fetch_urls([d for _, d in hits])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-            columns=["doc_id", "url", "score"],
-        )
+        spec = _TopkSpec(tuple(terms), td, k, self.avgdl, mode=mode,
+                         min_should=min_should_match, after=search_after)
+        wand_cutoff = EXHAUSTIVE_CUTOFF if use_wand is None \
+            else (0 if use_wand else math.inf)
+        return self.hits_frame(topk_group(
+            self._term_blocks(terms), spec, self.tombstones,
+            _narrowing(flt, None, self._read_fields), wand_cutoff))
 
     def phrase_topk(self, phrase_text: str, k: int,
                     use_segments: bool | None = None,
@@ -934,11 +916,10 @@ class SearchEngine:
         rescore-window hook, operators/rescore.py) — candidate
         intersection and position verify are bounded by the given set.
         The Σdf fan-out gate still applies: a head-term phrase routes
-        to :meth:`topk_segments` with the window broadcast (k-sized),
-        so the term's encoded blocks never reach the driver.
+        to :meth:`topk_segments` with the window in the task closure
+        (k-sized), so the term's encoded blocks never reach the driver.
         """
         _check_k(k)
-        empty = pd.DataFrame(columns=["doc_id", "url", "score"])
         if not self.has_positions:
             raise ValueError(
                 f"index at {self.index_dir!r} was built without positions "
@@ -946,44 +927,26 @@ class SearchEngine:
                 "streams; rebuild with IndexBuilder(index_positions=True)")
         # ORDERED, duplicates kept: "to be or not to be" is six terms
         terms = analyze_search(phrase_text, self.cfg)
-        if not terms:
-            return empty
         uniq = list(dict.fromkeys(terms))
-        meta = self._term_meta(uniq)
-        if any(meta[t] is None for t in uniq):
-            return empty    # a term absent from the corpus ⇒ no phrase match
+        meta = self._term_meta(uniq) if uniq else {}
+        if not uniq or any(meta[t] is None for t in uniq):
+            return self.hits_frame([])  # an absent term ⇒ no phrase match
         idf = {t: m[0] for t, m in meta.items()}
         flt = self._resolve_filter_list(filter_field, filter_value,
                                         filter_normalized, filters)
         if use_segments is None:
-            total_df = sum(m[1] for m in meta.values())
-            use_segments = total_df >= SEGMENT_FANOUT_CUTOFF
+            use_segments = self.fans_out(sum(m[1] for m in meta.values()))
         if use_segments:
             return self.topk_segments(uniq, idf, k, search_after=search_after,
                                       filter_clause=flt, phrase_terms=terms,
                                       phrase_slop=slop,
                                       allowed_docs=allowed_docs)
-        by_term = self._term_blocks(uniq)
-        if len(by_term) < len(uniq):
-            return empty
-        allowed_fn = None
-        if flt is not None:
-            allowed_fn = lambda cand: self._filter_allowed_list(cand, flt)  # noqa: E731
-        if allowed_docs is not None:
-            adocs = np.asarray(allowed_docs, dtype=np.int64)
-            base_fn = allowed_fn
-
-            def allowed_fn(cand, _base=base_fn, _adocs=adocs):
-                sub = cand if _base is None else _base(cand)
-                return sub[np.isin(sub, _adocs)]
-        hits = phrase_topk_arrays(terms, idf, by_term, self.avgdl, k,
-                                  self.tombstones, after=search_after,
-                                  allowed_fn=allowed_fn, slop=slop)
-        urls = self.fetch_urls([d for _, d in hits])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s} for s, d in hits],
-            columns=["doc_id", "url", "score"],
-        )
+        spec = _TopkSpec(tuple(uniq), idf, k, self.avgdl, phrase=terms,
+                         slop=slop, after=search_after)
+        return self.hits_frame(topk_group(
+            self._term_blocks(uniq), spec, self.tombstones,
+            _narrowing(flt, allowed_docs, self._read_fields),
+            EXHAUSTIVE_CUTOFF))
 
     def phrase_prefix_topk(self, phrase_text: str, k: int,
                            max_expansions: int = 50) -> pd.DataFrame:
@@ -1039,13 +1002,9 @@ class SearchEngine:
         kernel_terms = {t: by_term[t] for t in ufixed}
         kernel_terms[pseudo] = [_union_positions_block(exp_blocks)]
         idf[pseudo] = float(exps["idf"].sum())
-        hits = phrase_topk_arrays(fixed + [pseudo], idf, kernel_terms,
-                                  self.avgdl, k, self.tombstones)
-        urls = self.fetch_urls([d for _, d in hits])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s}
-             for s, d in hits],
-            columns=["doc_id", "url", "score"])
+        return self.hits_frame(phrase_topk_arrays(
+            fixed + [pseudo], idf, kernel_terms, self.avgdl, k,
+            self.tombstones))
 
     def explain(self, query_text: str, doc_id: int) -> pd.DataFrame:
         """ES ``_explain``: the per-term BM25 score breakdown for ONE doc
@@ -1131,8 +1090,7 @@ class SearchEngine:
         """
         files = self._segment_files()
         if max_groups is None:
-            max_groups = SEGMENT_MAX_GROUPS if SEGMENT_MAX_GROUPS else \
-                2 * self.spark.sparkContext.defaultParallelism
+            max_groups = 2 * self.spark.sparkContext.defaultParallelism
         return pack_segment_groups(files, max(1, int(max_groups)))
 
     def topk_segments(self, terms: list[str], idf_by_term: dict[str, float],
@@ -1162,12 +1120,12 @@ class SearchEngine:
         ``filter_clause``: one resolved ``(subcol, values)`` from
         :meth:`_resolve_filter`, or a LIST of them (the ES bool
         conjunction of several filter/must_not clauses) — each task
-        reads the ``fields`` rows for ITS candidate doc range (doc_id
-        range + value predicates pushed to parquet), so per-task filter
-        cost ∝ the group's range, never the filter's corpus-wide match
-        count; the driver still receives only ≤ k rows per group.
-        Group allowed-sets partition the global filter set exactly as
-        the postings do, preserving rank identity.
+        resolves them with :func:`filter_candidates` over ITS candidates,
+        reading only the ``fields`` files whose doc range overlaps them,
+        so per-task filter cost ∝ the group's candidates, never the
+        filter's corpus-wide match count.  Group allowed-sets partition
+        the global filter set exactly as the postings do, preserving
+        rank identity.
 
         ``phrase_terms``: run the phrase kernel per group instead of the
         WAND/conjunctive kernels (``terms`` is then the deduplicated term
@@ -1181,185 +1139,61 @@ class SearchEngine:
         complete within its one group.
 
         ``allowed_docs``: explicit doc_id whitelist (the rescore-window
-        contract) — broadcast once, each task intersects its own
-        doc-range slice; group slices partition the global set exactly
-        as the postings do, preserving rank identity.  Bounded by the
-        caller's window (≤ max_result_window), so the broadcast is k-
-        sized, never corpus-sized.
+        contract) — shipped in the task closure (the caller's window,
+        ≤ max_result_window ids, never corpus-sized); each task keeps
+        its own candidates' slice, and group slices partition the global
+        set exactly as the postings do, preserving rank identity.
+
+        The kernel cutoff is read HERE, on the driver, and shipped to the
+        tasks, so a task picks the kernel the driver would have picked.
         """
         _check_k(k)
         # only terms with a dictionary row are scorable (a fully-
         # tombstoned term keeps blocks until compaction but has no idf)
         terms = [t for t in terms if t in idf_by_term]
         groups = self._segment_groups() if terms else []
+        if allowed_docs is not None and len(allowed_docs) == 0:
+            groups = []
         if not groups:
-            return pd.DataFrame(columns=["doc_id", "url", "score"])
-        avgdl = self.avgdl
-        if filter_clause is None:
-            filter_clauses: list[tuple[str, object]] = []
-        elif isinstance(filter_clause, tuple):
-            filter_clauses = [filter_clause]
-        else:
-            filter_clauses = list(filter_clause)
-        fields_paths: list[tuple[str, int, int]] = []
-        if filter_clauses:
+            return self.hits_frame([])
+        clauses = [filter_clause] if isinstance(filter_clause, tuple) \
+            else list(filter_clause or [])
+        spans: list[tuple[str, object, object]] = []
+        if clauses:
             # per-file doc_id spans from the resident footer directory, so
             # each fan-out task opens ONLY the fields files overlapping
-            # its doc range — at 10^12 docs the fields table is millions
+            # its candidates — at 10^12 docs the fields table is millions
             # of files and a task must not touch every footer.  A file
             # with any stats-less row group gets an unbounded span.
             fidx = self._rg_index("fields", "doc_id")
-            spans: dict[int, list] = {}
+            per_file: dict[int, list] = {}
             for fi, _rg, lo, hi in fidx.entries:
-                cur = spans.setdefault(fi, [lo, hi])
+                cur = per_file.setdefault(fi, [lo, hi])
                 if lo is None or cur[0] is None:
                     cur[0] = cur[1] = None
                 else:
                     cur[0] = min(cur[0], lo)
                     cur[1] = max(cur[1], hi)
-            fields_paths = [(fidx.paths[fi], *span)
-                            for fi, span in spans.items()]
-        ts_bc = self.spark.sparkContext.broadcast(self.tombstones)
-        ad_sorted = None
-        if allowed_docs is not None:
-            ad_sorted = np.unique(np.asarray(allowed_docs, dtype=np.int64))
-            if ad_sorted.size == 0:
-                return pd.DataFrame(columns=["doc_id", "url", "score"])
-        ad_bc = self.spark.sparkContext.broadcast(ad_sorted)
+            spans = [(fidx.paths[fi], lo, hi)
+                     for fi, (lo, hi) in per_file.items()]
+        spec = _TopkSpec(tuple(terms), idf_by_term, k, self.avgdl, mode=mode,
+                         min_should=min_should, phrase=phrase_terms,
+                         slop=phrase_slop, after=search_after)
+        wand_cutoff = EXHAUSTIVE_CUTOFF
         payload = [("\n".join(g),) for g in groups]
         fdf = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(payload, len(payload)),
             "paths string")
+        ts_bc = self.spark.sparkContext.broadcast(self.tombstones)
 
         def _seg_topk(it):
-            import pyarrow.dataset as _pds
+            narrow = _narrowing(clauses, allowed_docs, _span_reader(spans))
             for pdf in it:
-                for paths_str in pdf["paths"].values:
-                    ds = _pds.dataset(paths_str.split("\n"), format="parquet")
-                    bl = ds.to_table(
-                        filter=_pds.field("term").isin(terms)).to_pandas()
-                    if not len(bl):
-                        continue
-                    by_term: dict[str, list[dict]] = {}
-                    recs = bl.to_dict("records")
-                    for r in recs:
-                        by_term.setdefault(r["term"], []).append(r)
-                    if (mode == "and" or phrase_terms is not None) \
-                            and len(by_term) < len(terms):
-                        continue        # some term absent ⇒ empty group
-                    decode_blocks_into(recs)
-                    allowed = None
-                    if filter_clauses:
-                        # this group's candidate doc range: fields rows
-                        # outside it cannot matter, so each clause's read
-                        # opens only the span-overlapping files (driver-
-                        # computed footer spans) and pushes range + value
-                        # predicates; clauses intersect (ES bool AND)
-                        lo = min(int(r["first_doc"]) for r in recs)
-                        hi = max(int(r["last_doc"]) for r in recs)
-                        sel = [p for p, flo, fhi in fields_paths
-                               if flo is None or not (fhi < lo or flo > hi)]
-                        cand_arr = None   # lazy: only must_not needs it
-                        dead = False
-                        for fsub, fvalues in filter_clauses:
-                            negate = isinstance(fvalues, MustNotClause)
-                            fvals = fvalues.inner if negate else fvalues
-                            if not sel and not negate:
-                                dead = True   # no fields rows in range
-                                break
-                            if isinstance(fvals, RangeClause):
-                                vpred = ((_pds.field(fsub) >= fvals.lo)
-                                         & (_pds.field(fsub)
-                                            <= fvals.hi))
-                            elif isinstance(fvals, ExistsClause):
-                                vpred = _pds.field(fsub).is_valid()
-                            else:
-                                vpred = _pds.field(fsub).isin(fvals)
-                            fexpr = (vpred
-                                     & (_pds.field("doc_id") >= lo)
-                                     & (_pds.field("doc_id") <= hi))
-                            match = np.empty(0, dtype=np.int64)
-                            if sel:
-                                ft = _pds.dataset(sel, format="parquet") \
-                                    .to_table(filter=fexpr,
-                                              columns=["doc_id"])
-                                match = ft["doc_id"].to_numpy(
-                                    zero_copy_only=False).astype(np.int64)
-                            if negate:
-                                # must_not: complement of the in-range
-                                # matching set within THIS group's
-                                # candidate postings (arrays already
-                                # decoded in-task — vectorized, range-
-                                # bounded, never corpus-bounded)
-                                if cand_arr is None:
-                                    cand_arr = np.unique(np.concatenate(
-                                        [_block_arrays(r)[0]
-                                         for r in recs]))
-                                keep = cand_arr[~np.isin(cand_arr, match)]
-                                this = frozenset(keep.tolist())
-                            else:
-                                this = frozenset(match.tolist())
-                            allowed = this if allowed is None \
-                                else allowed & this
-                            if not allowed:
-                                dead = True
-                                break
-                        if dead:
-                            continue
-                    ad = ad_bc.value
-                    if ad is not None:
-                        # this group's slice of the whitelist — doc-
-                        # disjoint groups partition the global set
-                        glo = min(int(r["first_doc"]) for r in recs)
-                        ghi = max(int(r["last_doc"]) for r in recs)
-                        ga = ad[(ad >= glo) & (ad <= ghi)]
-                        if ga.size == 0:
-                            continue    # no whitelisted doc in this range
-                        allowed = (frozenset(ga.tolist()) if allowed is None
-                                   else allowed & frozenset(ga.tolist()))
-                        if not allowed:
-                            continue
-                    if phrase_terms is not None:
-                        allowed_fn = None
-                        if allowed is not None:
-                            aarr = np.fromiter(allowed, dtype=np.int64)
-                            aarr.sort()
-                            allowed_fn = (lambda a: lambda c:
-                                          c[np.isin(c, a,
-                                                    assume_unique=True)])(aarr)
-                        hits = phrase_topk_arrays(
-                            phrase_terms, idf_by_term, by_term, avgdl, k,
-                            ts_bc.value, after=search_after,
-                            allowed_fn=allowed_fn, slop=phrase_slop)
-                    elif int(bl["n"].sum()) >= EXHAUSTIVE_CUTOFF:
-                        cursors = [_TermCursor(idf_by_term[t], by_term[t], avgdl)
-                                   for t in terms if t in by_term]
-                        if not cursors:
-                            hits = []
-                        elif mode == "and":
-                            hits = conjunctive_topk_arrays(
-                                cursors, avgdl, k, ts_bc.value,
-                                after=search_after, allowed=allowed)
-                        else:
-                            hits = wand_topk_arrays(cursors, avgdl, k,
-                                                    ts_bc.value,
-                                                    after=search_after,
-                                                    allowed=allowed,
-                                                    min_should=min_should)
-                    else:
-                        hits = exhaustive_topk_arrays(
-                            {t: (idf_by_term[t], by_term[t])
-                             for t in terms if t in by_term},
-                            avgdl, k, ts_bc.value,
-                            require_all=(mode == "and"),
-                            after=search_after,
-                            allowed=None if allowed is None else
-                            np.fromiter(allowed, dtype=np.int64),
-                            min_should=min_should)
+                for paths in pdf["paths"].values:
+                    hits = topk_group(_group_blocks(paths.split("\n"), terms),
+                                      spec, ts_bc.value, narrow, wand_cutoff)
                     if hits:
-                        yield pd.DataFrame(
-                            {"score": [s for s, _ in hits],
-                             "doc_id": [d for _, d in hits]})
+                        yield pd.DataFrame(hits, columns=["score", "doc_id"])
 
         try:
             rows = fdf.mapInPandas(
@@ -1370,12 +1204,7 @@ class SearchEngine:
             ts_bc.unpersist()
         merged = sorted(((r["score"], r["doc_id"]) for r in rows),
                         key=lambda t: (-t[0], t[1]))[:k]
-        urls = self.fetch_urls([d for _, d in merged])
-        return pd.DataFrame(
-            [{"doc_id": d, "url": urls.get(d), "score": s}
-             for s, d in merged],
-            columns=["doc_id", "url", "score"],
-        )
+        return self.hits_frame(merged)
 
 
 # Module-level cache: (index_dir) → SearchEngine, invalidated when any
@@ -1554,11 +1383,6 @@ BLOCK_CACHE_MAX_POSTINGS = 1 << 20
 # fetch stops being obviously cheap.
 SEGMENT_FANOUT_CUTOFF = 1 << 22
 
-# hard cap on fanned-out task count per query: None → 2 × the session's
-# defaultParallelism (ES analog: a fixed shard count, never one request
-# per Lucene segment).  Settable for tests / tuning.
-SEGMENT_MAX_GROUPS: int | None = None
-
 # driver-resident tombstone set size above which SearchEngine warns to
 # compact (the set is bounded by churn-since-compaction BY POLICY, not by
 # construction — ~8 B/id, 5M ≈ 40 MB driver RAM + per-query broadcast)
@@ -1601,6 +1425,170 @@ def pack_segment_groups(files: list[tuple[str, int]], max_groups: int
     if cur:
         groups.append(cur)
     return groups
+
+
+class _TopkSpec(NamedTuple):
+    """What one top-k query asks of every group it runs on — picklable,
+    it travels to the fan-out tasks.  ``terms``: the scorable terms
+    (deduplicated); ``phrase``: the ordered phrase tokens, repeats kept
+    (None = a term query); ``after``: the search_after cursor."""
+    terms: tuple
+    idf: dict
+    k: int
+    avgdl: float
+    mode: str = "or"
+    min_should: int | None = None
+    phrase: list | None = None
+    slop: int = 0
+    after: tuple | None = None
+
+
+def topk_group(by_term: dict[str, list[dict]], spec: _TopkSpec,
+               tombstones: set[int], narrow, wand_cutoff: float
+               ) -> list[tuple[float, int]]:
+    """Top-k of one doc-disjoint group of postings → ``[(score,
+    doc_id)]`` best-first: the one execution step of every top-k
+    serving path.  The driver runs it over the whole index, each fan-out
+    task over its segment group (ES runs the same scorer per shard and
+    merges the shard top-ks).  Picks the kernel once: phrase, else
+    conjunctive/WAND at ≥ ``wand_cutoff`` candidate postings, else
+    exhaustive — all rank-identical (property-tested).
+
+    ``by_term``: term → this group's posting blocks (decoded here as
+    the kernel needs).  ``narrow``: None, or a map from the sorted
+    candidate doc_ids to their allowed subset (:func:`_narrowing`).
+    ``wand_cutoff``: read by the CALLER on the driver at query time, so
+    the driver and every task pick the same kernel."""
+    if spec.phrase is not None:
+        return phrase_topk_arrays(spec.phrase, spec.idf, by_term,
+                                  spec.avgdl, spec.k, tombstones,
+                                  after=spec.after, allowed_fn=narrow,
+                                  slop=spec.slop)
+    terms = [t for t in spec.terms if t in by_term]
+    if not terms or (spec.mode == "and" and len(terms) < len(spec.terms)):
+        return []
+    blocks = [b for t in terms for b in by_term[t]]
+    # batch-decode every not-yet-decoded block in three vectorized
+    # passes (cached blocks keep their arrays across queries)
+    decode_blocks_into([b for b in blocks if "_arrs" not in b])
+    allowed = None
+    if narrow is not None:
+        allowed = narrow(np.unique(np.concatenate(
+            [_block_arrays(b)[0] for b in blocks])))
+        if allowed.size == 0:
+            return []
+    if sum(b["n"] for b in blocks) < wand_cutoff:
+        return exhaustive_topk_arrays(
+            {t: (spec.idf[t], by_term[t]) for t in terms}, spec.avgdl,
+            spec.k, tombstones, require_all=spec.mode == "and",
+            after=spec.after, allowed=allowed, min_should=spec.min_should)
+    allowed = None if allowed is None else frozenset(allowed.tolist())
+    cursors = [_TermCursor(spec.idf[t], by_term[t], spec.avgdl)
+               for t in terms]
+    if spec.mode == "and":
+        return conjunctive_topk_arrays(cursors, spec.avgdl, spec.k,
+                                       tombstones, after=spec.after,
+                                       allowed=allowed)
+    return wand_topk_arrays(cursors, spec.avgdl, spec.k, tombstones,
+                            after=spec.after, allowed=allowed,
+                            min_should=spec.min_should)
+
+
+def filter_candidates(cand: np.ndarray, clauses, read,
+                      allowed_docs: "np.ndarray | None" = None
+                      ) -> np.ndarray:
+    """The one filter-context evaluator: the sorted doc_ids among
+    ``cand`` that are in the ``allowed_docs`` whitelist (None = no
+    whitelist) and satisfy every resolved ``(subcol, clause)`` of
+    ``clauses`` — a term/terms value list, :class:`RangeClause`,
+    :class:`ExistsClause`, or a :class:`MustNotClause` around one of
+    them (the ES bool conjunction).
+
+    ``read(ids, subcols)`` returns the ``fields`` rows (doc_id +
+    subcols) of ``ids``: the driver reads the engine's resident
+    ``fields`` directory, a fan-out task only the ``fields`` files
+    overlapping its candidates (:func:`_span_reader`).  Either way the
+    cost is ∝ the candidates, NEVER ∝ a clause's match count — a broad
+    filter (lang='en' ≈ 60% of a 10^12-doc corpus) must not materialize
+    billions of ids the way reading the value-sorted sidecar would."""
+    cand = np.asarray(cand, dtype=np.int64)
+    if allowed_docs is not None:
+        cand = cand[np.isin(cand, allowed_docs)]
+    if not clauses or cand.size == 0:
+        return cand
+    pdf = read(cand, sorted({sub for sub, _ in clauses}))
+    ids = pdf["doc_id"].to_numpy(np.int64)
+    for sub, values in clauses:
+        negate = isinstance(values, MustNotClause)
+        inner = values.inner if negate else values
+        v = pdf[sub]
+        if isinstance(inner, RangeClause):
+            m = (v >= inner.lo) & (v <= inner.hi)
+        elif isinstance(inner, ExistsClause):
+            m = v.notna()
+        else:
+            m = v.isin(inner)
+        hit = ids[m.to_numpy(bool)]
+        # must_not = complement within the candidates: docs whose
+        # sub-field is NULL/absent never match the inner clause, so they
+        # survive — exactly ES (see MustNotClause)
+        cand = np.setdiff1d(cand, hit) if negate \
+            else np.intersect1d(cand, hit)
+        if cand.size == 0:
+            break
+    return cand
+
+
+def _narrowing(clauses, allowed_docs, read):
+    """:func:`topk_group`'s candidate-narrowing function for resolved
+    filter ``clauses`` and an ``allowed_docs`` whitelist (doc_ids, or
+    None); None when there is nothing to narrow."""
+    if not clauses and allowed_docs is None:
+        return None
+    if allowed_docs is not None:
+        allowed_docs = np.unique(np.asarray(allowed_docs, dtype=np.int64))
+    return functools.partial(filter_candidates, clauses=clauses, read=read,
+                             allowed_docs=allowed_docs)
+
+
+def _span_reader(spans: list[tuple[str, object, object]]):
+    """A fan-out task's :func:`filter_candidates` reader: opens only the
+    ``fields`` files whose ``(path, min, max)`` doc_id span (None =
+    unknown) overlaps the candidates, then point-reads their row
+    groups through the same :class:`_RowGroupIndex` the driver uses."""
+    def read(ids: np.ndarray, subs: list[str]) -> pd.DataFrame:
+        lo, hi = int(ids[0]), int(ids[-1])
+        sel = [p for p, flo, fhi in spans
+               if flo is None or not (fhi < lo or flo > hi)]
+        if not sel:
+            return pd.DataFrame(columns=["doc_id", *subs])
+        idx = _RowGroupIndex(sel, "doc_id")
+        try:
+            return idx.read_isin(ids.tolist(), ["doc_id", *subs])
+        finally:
+            idx.close()
+    return read
+
+
+def _group_blocks(paths: list[str], terms: list[str]
+                  ) -> dict[str, list[dict]]:
+    """term → posting-block rows of one segment group: one pyarrow read
+    of the group's files with the term predicate pushed to parquet."""
+    import pyarrow.dataset as pds
+    tbl = pds.dataset(paths, format="parquet").to_table(
+        filter=pds.field("term").isin(terms))
+    by_term: dict[str, list[dict]] = {}
+    for r in tbl.to_pandas().to_dict("records"):
+        by_term.setdefault(r["term"], []).append(r)
+    return by_term
+
+
+def rank_arrays(docs: np.ndarray, scores: np.ndarray, k: int
+                ) -> list[tuple[float, int]]:
+    """Top-k of parallel doc/score arrays as ``[(score, doc_id)]``,
+    score desc then doc_id asc."""
+    order = np.lexsort((docs, -scores))[:k]
+    return [(float(scores[i]), int(docs[i])) for i in order]
 
 
 def match_scores_arrays(term_blocks: dict[str, tuple[float, list[dict]]],
@@ -1687,10 +1675,7 @@ def exhaustive_topk_arrays(term_blocks: dict[str, tuple[float, list[dict]]],
         s0, d0 = float(after[0]), int(after[1])
         keep = (agg < s0) | ((agg == s0) & (uniq > d0))
         uniq, agg = uniq[keep], agg[keep]
-    if uniq.size == 0:
-        return []
-    order = np.lexsort((uniq, -agg))[:k]
-    return [(float(agg[i]), int(uniq[i])) for i in order]
+    return rank_arrays(uniq, agg, k)
 
 
 def conjunctive_topk_arrays(cursors: list[_TermCursor], avgdl: float, k: int,
@@ -1850,7 +1835,7 @@ def phrase_topk_arrays(phrase_terms: list[str],
 
     ``allowed_fn``: ES filter context — maps the sorted candidate doc
     array to its allowed subset (candidate-bounded resolution, see
-    :meth:`SearchEngine._filter_allowed`).  ``after``: search_after
+    :func:`filter_candidates`).  ``after``: search_after
     cursor, as in the other kernels.
     """
     uniq = list(dict.fromkeys(phrase_terms))
@@ -1973,10 +1958,7 @@ def phrase_topk_arrays(phrase_terms: list[str],
         s0, d0 = float(after[0]), int(after[1])
         m = (scores < s0) | ((scores == s0) & (docs_k > d0))
         scores, docs_k = scores[m], docs_k[m]
-    if docs_k.size == 0:
-        return []
-    order = np.lexsort((docs_k, -scores))[:k]
-    return [(float(scores[i]), int(docs_k[i])) for i in order]
+    return rank_arrays(docs_k, scores, k)
 
 
 def wand_topk_arrays(cursors: list[_TermCursor], avgdl: float, k: int,

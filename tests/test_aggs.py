@@ -767,3 +767,70 @@ def test_string_stats_agg(spark, agg_index, tiny_pages, oracle_tiny):
     ent = -sum((n / tot) * math.log2(n / tot)
                for _, n in sorted(cc.items()))
     assert abs(float(got["entropy"]) - ent) < 1e-9
+
+
+def test_significant_terms_msm_same_on_both_loci(spark, agg_index,
+                                                 oracle_tiny, monkeypatch):
+    """The driver hit set validates minimum_should_match exactly like
+    match_set: msm with mode='and' raises on both sides of the cutoff,
+    and msm=0 returns the same buckets on both sides."""
+    import mongoesindexer_spark.operators.topk as topk_mod
+    from mongoesindexer_spark.operators.aggs import \
+        search_significant_terms_agg
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, agg_index)
+    n = len(oracle_tiny.doc_len)
+    q = " ".join(sorted(t for t, ds in oracle_tiny.postings.items()
+                        if 5 <= len(ds) <= n // 4)[:2])
+    got = []
+    for cutoff in (topk_mod.SEGMENT_FANOUT_CUTOFF, 1):
+        monkeypatch.setattr(topk_mod, "SEGMENT_FANOUT_CUTOFF", cutoff)
+        with pytest.raises(ValueError):
+            search_significant_terms_agg(eng, q, mode="and",
+                                         min_should_match=2)
+        got.append(search_significant_terms_agg(
+            eng, q, size=8, min_should_match=0).toPandas())
+    below, above = got
+    assert len(below) > 0
+    assert list(below["term"]) == list(above["term"])
+    assert list(below["fg_df"]) == list(above["fg_df"])
+    assert np.allclose(below["score"], above["score"])
+
+
+def test_bucket_names_with_quotes(spark, agg_index, oracle_tiny):
+    """Caller bucket names are data, never SQL text."""
+    from mongoesindexer_spark.operators.aggs import (
+        search_adjacency_matrix_agg, search_filters_agg)
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, agg_index)
+    a, b = "it's", "b'), ('x"
+    flt = {a: ("udrndau", "or"), b: ("atreq kni", "and")}
+    sa = _hit_set(oracle_tiny, "udrndau")
+    sb = _hit_set(oracle_tiny, "atreq kni", mode="and")
+    got = {r.bucket: int(r.doc_count) for r in
+           search_filters_agg(eng, flt).toPandas().itertuples()}
+    assert got == {a: len(sa), b: len(sb)}
+    got = {r.bucket: int(r.doc_count) for r in
+           search_adjacency_matrix_agg(eng, flt).toPandas().itertuples()}
+    want = {a: len(sa), b: len(sb), f"{b}&{a}": len(sa & sb)}
+    assert got == {k: v for k, v in want.items() if v > 0}
+
+
+def test_exact_sum_aggs_reject_float_columns(spark, agg_index):
+    """extended_stats / weighted_avg sum exactly as BIGINT; a double
+    column raises instead of being truncated."""
+    from mongoesindexer_spark.operators.aggs import (
+        search_extended_stats_agg, search_weighted_avg_agg)
+    from mongoesindexer_spark.operators.topk import get_engine
+    eng = get_engine(spark, agg_index)
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(4, dtype=np.int64),
+        "x": [0.5, 1.5, 2.5, 3.5],
+        "w": np.arange(4, dtype=np.int64)}))
+    q = "udrndau atreq"
+    with pytest.raises(TypeError, match="integer"):
+        search_extended_stats_agg(eng, docs, q, "x")
+    with pytest.raises(TypeError, match="integer"):
+        search_weighted_avg_agg(eng, docs, q, "x", "w")
+    with pytest.raises(TypeError, match="integer"):
+        search_weighted_avg_agg(eng, docs, q, "w", "x")

@@ -3,6 +3,7 @@ catalog seam, and end-to-end filesystem threading (VERDICT r3 items 1-5, 9).
 """
 
 import datetime as dt
+import functools
 import os
 import warnings
 
@@ -66,7 +67,6 @@ def test_fanout_rank_identical_with_multifile_groups(spark, tiny_dir,
     """Rank identity must survive bin-packing multiple doc-disjoint
     segment files into one task (groups stay doc-disjoint because files
     are doc-range-ordered and consecutive)."""
-    from mongoesindexer_spark.operators import topk as topk_mod
     from mongoesindexer_spark.operators.build_index import IndexBuilder
     from mongoesindexer_spark.operators.topk import get_engine
     from mongoesindexer_spark.streaming.incremental import IncrementalIndexer
@@ -83,8 +83,11 @@ def test_fanout_rank_identical_with_multifile_groups(spark, tiny_dir,
         "text string, lang string")
     IncrementalIndexer(idx).apply_updates(spark, ups)
 
-    monkeypatch.setattr(topk_mod, "SEGMENT_MAX_GROUPS", 2)
+    # cap this engine's fan-out at 2 groups (the production cap is
+    # 2 × defaultParallelism, far above this fixture's file count)
     eng = get_engine(spark, idx)
+    monkeypatch.setattr(eng, "_segment_groups",
+                        functools.partial(eng._segment_groups, max_groups=2))
     assert len(eng._segment_groups()) <= 2
     assert any(len(g) > 1 for g in eng._segment_groups()), \
         "cap did not force multi-file groups — test is vacuous"
@@ -97,6 +100,41 @@ def test_fanout_rank_identical_with_multifile_groups(spark, tiny_dir,
             assert [(x.doc_id, round(x.score, 9)) for x in drv.itertuples()] \
                 == [(x.doc_id, round(x.score, 9)) for x in seg.itertuples()], \
                 (r.query_text, mode)
+
+
+def test_fanout_releases_every_broadcast(spark, tiny_index, monkeypatch):
+    """A fanned-out query must unpersist every broadcast it creates
+    before returning — a serving process runs many of them — including
+    the early return for an empty doc_id whitelist."""
+    from pyspark import SparkContext
+
+    from mongoesindexer_spark.operators.topk import get_engine
+
+    made = []      # [broadcast, released?]
+    orig = SparkContext.broadcast
+
+    def spy(self, value):
+        bc = orig(self, value)
+        rec = [bc, False]
+        release = bc.unpersist
+
+        def unpersist(blocking=False):
+            rec[1] = True
+            return release(blocking)
+
+        bc.unpersist = unpersist
+        made.append(rec)
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    eng = get_engine(spark, tiny_index)
+    q = "udrndau atreq"
+    assert len(eng.topk_wand(q, 10, use_segments=True)) > 0
+    assert made and all(released for _, released in made)
+    made.clear()
+    idf = {t: m[0] for t, m in eng._term_meta(["udrndau"]).items()}
+    assert eng.topk_segments(["udrndau"], idf, 10, allowed_docs=[]).empty
+    assert all(released for _, released in made)
 
 
 # ---------------------------------------------------------------------------
